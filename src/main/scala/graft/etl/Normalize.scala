@@ -23,6 +23,10 @@ import org.apache.spark.sql.types._
   * dims dedup with a deterministic latest-wins window, never
   * `dropDuplicates` (plan-dependent survivor). All reads declare the
   * schema — `inferSchema`/`schema_of_json` would scan 100 TB twice.
+  * The three tables derive from one shared explode ([[StarSchema.items]]),
+  * and the raw layer is parsed once per load: [[graft.io.Sinks.writeStarSchema]]
+  * owns that decision — it caches the items for its three table writes
+  * and releases them — so callers need not cache the raw frame.
   */
 object Normalize {
 
@@ -80,7 +84,13 @@ object Normalize {
   def readRaw(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
     spark.read.option("multiLine", multiLine).schema(rawSchema).json(path)
 
-  final case class StarSchema(albums: DataFrame, artists: DataFrame, songs: DataFrame)
+  /** The three star-schema tables plus `items`, the frame all three
+    * derive from: one row per playlist-track item (`playlist_id`,
+    * `extracted_at`, `item`), i.e. the parsed and exploded raw layer.
+    * Each table is its own action, so a consumer that evaluates more
+    * than one stages `items` first (see [[graft.io.Sinks.writeStarSchema]]). */
+  final case class StarSchema(albums: DataFrame, artists: DataFrame, songs: DataFrame,
+      items: DataFrame)
 
   /** Deterministic latest-wins dedup by `pk` (N3/W2): newest
     * extracted_at survives. The survivor is well-defined ONLY if
@@ -168,6 +178,6 @@ object Normalize {
       "artist_id", tieBreak = Seq("artist_name", "artist_url"))
       .withColumn("transformed_at", transformedAt)
 
-    StarSchema(albums = albums, artists = artists, songs = songs)
+    StarSchema(albums = albums, artists = artists, songs = songs, items = items)
   }
 }

@@ -225,18 +225,12 @@ object EtlCapstone {
         // 1-2. extract + stage the raw document layer (JSON lines —
         // splittable, the Spark-idiomatic staging format)
         envelopes(s, dir).write.mode("overwrite").json(landing)
-        // 3-4. declared-schema read + normalize. The parsed raw layer is
-        // persisted across the THREE table writes below — each write is
-        // its own action, and without the cache every one re-parses the
-        // JSON stage (3× the transform cost; at real scale, 3× a full
-        // raw-layer scan). Released before returning: the result frame
-        // reads the warehouse parquet, not this cache.
-        val raw = Normalize.readRaw(s, landing).persist()
-        try {
-          val star = Normalize.normalize(raw, to_timestamp(lit(TransformedAt)))
-          // 5. warehouse load, audit-stamped, into THIS generation's dir
-          Sinks.writeStarSchema(star, wh, to_timestamp(lit(LoadedAt)))
-        } finally raw.unpersist(blocking = false)
+        // 3-4. declared-schema read + normalize
+        val star = Normalize.normalize(Normalize.readRaw(s, landing),
+          to_timestamp(lit(TransformedAt)))
+        // 5. warehouse load, audit-stamped, into THIS generation's dir;
+        // the sink parses the JSON stage once for its three table writes
+        Sinks.writeStarSchema(star, wh, to_timestamp(lit(LoadedAt)))
         wh
       } }
       // 6. read back the LOADED tables (not the in-flight frames):

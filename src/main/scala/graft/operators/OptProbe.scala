@@ -142,15 +142,10 @@ object OptProbe {
         timed("env-noop-2nd")(mat(env))
         timed("json-write")(env.write.mode("overwrite").json(landing))
         timed("json-write-2nd")(env.write.mode("overwrite").json(landing))
-        val raw = timed("readRaw+persist") {
-          val r = graft.etl.Normalize.readRaw(s, landing).persist()
-          r.count(); r
-        }
-        val star = graft.etl.Normalize.normalize(raw,
+        val star = graft.etl.Normalize.normalize(graft.etl.Normalize.readRaw(s, landing),
           to_timestamp(lit("2024-01-02 00:00:00")))
         timed("writeStarSchema")(graft.io.Sinks.writeStarSchema(star,
           s"$base/warehouse/g1", to_timestamp(lit("2024-01-03 00:00:00"))))
-        raw.unpersist(blocking = false)
         timed("readback")(mat(s.read.parquet(s"$base/warehouse/g1/song_data")))
       case "q86legs" =>
         // q86's catalog-MV lifecycle leg by leg (inline mirror of
